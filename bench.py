@@ -501,9 +501,9 @@ def main() -> None:
         # evidence.  The full record now lands at a path suffixed with
         # the core count, so scaling runs never overwrite each other;
         # bench_full.json stays as a "latest run" convenience copy.
-        n_cores = os.environ.get("SPARK_GRAFT_CPUS") or str(
-            spark.sparkContext.defaultParallelism
-        )
+        # The label comes from the session that produced the record, not
+        # from SPARK_GRAFT_CPUS, which SPARK_MASTER can override.
+        n_cores = spark.sparkContext.defaultParallelism
         full_rel = f"docs/preflight/bench_full_c{n_cores}.json"
         full_path = os.path.join(ROOT, *full_rel.split("/"))
         os.makedirs(os.path.dirname(full_path), exist_ok=True)

@@ -1410,6 +1410,67 @@ class TestDhashStreamReplay:
         )
 
 
+class TestStateSchemaDrift:
+    """A resumed stream whose state table was written on the other
+    side of ``threshold == 1.0`` must fail before any batch runs,
+    naming the ``k`` column and the threshold."""
+
+    def _state(self, spark, path, with_k: bool, split: bool):
+        from textract_farmdata_pipeline_spark.operators.dedup import (
+            sorted_shingle_key,
+        )
+        from textract_farmdata_pipeline_spark.operators.merge import (
+            ParquetMergeTable,
+        )
+
+        rows = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+        if split:
+            rows = rows.select(
+                "doc_id", "text", F.lit("train").alias("split"),
+                F.lit("fresh").alias("origin"),
+            )
+        if with_k:
+            rows = rows.withColumn("k", sorted_shingle_key(F.col("text")))
+        ParquetMergeTable(spark, path).create(rows.coalesce(1))
+
+    def _stream(self, spark, tmp_path):
+        src = str(tmp_path / "incoming")
+        os.makedirs(src, exist_ok=True)
+        return spark.readStream.schema("doc_id long, text string").parquet(src)
+
+    @pytest.mark.parametrize("threshold,with_k", [(1.0, False), (0.5, True)])
+    def test_dedup_stream_rejects_mismatched_state(
+        self, spark, tmp_path, threshold, with_k
+    ):
+        from textract_farmdata_pipeline_spark.streaming import dedup_ingest_stream
+
+        path = str(tmp_path / "corpus")
+        self._state(spark, path, with_k=with_k, split=False)
+        with pytest.raises(ValueError, match=rf"'k'.*threshold={threshold}"):
+            dedup_ingest_stream(self._stream(spark, tmp_path), path, threshold=threshold)
+
+    @pytest.mark.parametrize("threshold,with_k", [(1.0, False), (0.5, True)])
+    def test_split_stream_rejects_mismatched_state(
+        self, spark, tmp_path, threshold, with_k
+    ):
+        from textract_farmdata_pipeline_spark.streaming.ingest import (
+            split_ingest_stream,
+        )
+
+        path = str(tmp_path / "splits")
+        self._state(spark, path, with_k=with_k, split=True)
+        with pytest.raises(ValueError, match=rf"'k'.*threshold={threshold}"):
+            split_ingest_stream(self._stream(spark, tmp_path), path, threshold=threshold)
+
+    @pytest.mark.parametrize("threshold", [1.0, 0.5])
+    def test_matching_state_resumes(self, spark, tmp_path, threshold):
+        from textract_farmdata_pipeline_spark.streaming import dedup_ingest_stream
+
+        path = str(tmp_path / "corpus")
+        self._state(spark, path, with_k=threshold == 1.0, split=False)
+        dedup_ingest_stream(self._stream(spark, tmp_path), path, threshold=threshold)
+
+
 class TestSplitStreamReplay:
     def test_stream_equals_batch_loop_at_general_threshold(
         self, spark, tmp_path, sf_dir

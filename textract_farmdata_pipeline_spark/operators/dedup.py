@@ -781,9 +781,10 @@ def _exact_set_links(
     hashed_sh: Column,
     corp_keys: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Exact-set fast path shared by the incremental dedup/split cores
-    at ``threshold >= 1.0`` (guide §2.4 — remove shuffles the semantics
-    don't need).
+    """Exact-set fast path of the incremental split core at
+    ``threshold == 1.0`` (guide §2.4 — remove shuffles the semantics
+    don't need); the dedup core uses the leaner
+    :func:`_exact_set_annotation`.
 
     Jaccard ≥ 1.0 holds iff the two (non-empty) shingle SETS are equal:
     banding capture is exact there (equal sets ⇒ identical MinHash
@@ -835,6 +836,66 @@ def _exact_set_links(
     return corp_verified, batch_verified
 
 
+def _exact_set_annotation(
+    corpus: DataFrame,
+    new_docs: DataFrame,
+    shingle_n: int = 3,
+    hash_family: str = "xxhash64",
+    corpus_keys: DataFrame | None = None,
+) -> DataFrame:
+    """The ``threshold == 1.0`` form of :func:`incremental_minhash_dedup`
+    as ONE exchange: ``(doc_id, text, k, dup_of)`` per new doc, where
+    ``k`` is its :func:`sorted_shingle_key`.
+
+    At Jaccard 1.0 a link is set equality, which is transitive, so a
+    doc's duplicate class is simply its key class.  The key of a
+    non-NULL text is never empty (a split yields at least one token and
+    the shingle window runs at least once), so equal texts always share
+    a key class; NULL texts share one too (a NULL key at
+    ``shingle_n == 1``, the key of the one NULL shingle otherwise).
+    The batch is keyed in each of its two uses — the broadcast of its
+    keys and the union — which is batch-sized work.  The corpus keys
+    (stored, or computed from ``corpus``) are semi-filtered against the
+    broadcast batch keys (null-unsafe: a NULL corpus key never
+    matches), the two sides are unioned, and ONE window on ``k`` gives
+
+    * ``corp_min`` — the minimum corpus doc with the same key;
+    * the minimum new doc with the same key, kept as ``new_min`` only
+      when it is below the doc's own id.
+
+    ``dup_of = least(corp_min, new_min)``.
+    """
+    key = sorted_shingle_key(F.col("text"), shingle_n, hash_family).alias("k")
+    new = new_docs.select("doc_id", "text", key)
+    if corpus_keys is not None:
+        ck = corpus_keys.select("doc_id", "k")
+    else:
+        ck = corpus.select("doc_id", key)
+    corp = ck.join(F.broadcast(new.select("k")), "k", "left_semi")
+    is_new = F.col("_new")
+    both = new.withColumn("_new", F.lit(True)).unionByName(
+        corp.select(
+            "doc_id", F.lit(None).cast("string").alias("text"), "k",
+            F.lit(False).alias("_new"),
+        )
+    )
+    w = Window.partitionBy("k")
+    corp_min = F.min(F.when(~is_new, F.col("doc_id"))).over(w)
+    new_min = F.min(F.when(is_new, F.col("doc_id"))).over(w)
+    return (
+        both.select("doc_id", "text", "k", is_new, corp_min.alias("corp_min"),
+                    new_min.alias("new_min"))
+        .filter(is_new)
+        .select(
+            "doc_id", "text", "k",
+            F.least(
+                F.col("corp_min"),
+                F.when(F.col("new_min") < F.col("doc_id"), F.col("new_min")),
+            ).alias("dup_of"),
+        )
+    )
+
+
 def incremental_minhash_dedup(
     corpus: DataFrame,
     new_docs: DataFrame,
@@ -854,6 +915,11 @@ def incremental_minhash_dedup(
     replaces per-call re-tokenization of the corpus with a read of the
     stored keys.  The streaming ingest handler maintains it alongside
     the corpus text.
+
+    At ``threshold == 1.0`` none of the machinery below runs: a link is
+    shingle-set equality, so the annotation is one exchange on the
+    sorted shingle key plus a broadcast semi-filter of the corpus keys
+    against the batch keys (see :func:`_exact_set_annotation`).
 
     Candidate generation is (new × corpus) ∪ (new × new) on LSH band
     buckets; corpus-side work is linear (signatures + bucket index,
@@ -880,6 +946,15 @@ def incremental_minhash_dedup(
         raise ValueError(
             "corpus_keys only applies to the threshold == 1.0 exact-set path"
         )
+    # == not >=: for a (degenerate) threshold > 1.0 the general banding
+    # path links nothing (Jaccard never exceeds 1.0) while the exact-set
+    # path would still link equal sets — gate on exactly 1.0 so both
+    # paths agree on every threshold (r13 ADVICE).
+    if threshold == 1.0:
+        return _exact_set_annotation(
+            corpus, new_docs, shingle_n, hash_family, corpus_keys
+        ).select("doc_id", "dup_of")
+
     newg = new_docs.select("doc_id", "text").withColumn(
         "rep_id", F.min("doc_id").over(Window.partitionBy("text"))
     )
@@ -896,76 +971,67 @@ def incremental_minhash_dedup(
             F.transform(shingles(F.col("text"), shingle_n), lambda s: F.xxhash64(s))
         )
 
-    # == not >=: for a (degenerate) threshold > 1.0 the general banding
-    # path links nothing (Jaccard never exceeds 1.0) while the exact-set
-    # path would still link equal sets — gate on exactly 1.0 so both
-    # paths agree on every threshold (r13 ADVICE).
-    if threshold == 1.0:
-        corp_verified, batch_verified = _exact_set_links(
-            new_reps, corp_reps, hashed_sh, corp_keys=corpus_keys
-        )
-    else:
-        new_sigs = band_buckets(
-            minhash_signatures(new_reps, n_hashes, shingle_n, hash_family=hash_family),
-            n_hashes,
-            bands,
-            portable=portable,
-        )
-        corp_sigs = band_buckets(
-            minhash_signatures(corp_reps, n_hashes, shingle_n, hash_family=hash_family),
-            n_hashes,
-            bands,
-            portable=portable,
-        )
+    new_sigs = band_buckets(
+        minhash_signatures(new_reps, n_hashes, shingle_n, hash_family=hash_family),
+        n_hashes,
+        bands,
+        portable=portable,
+    )
+    corp_sigs = band_buckets(
+        minhash_signatures(corp_reps, n_hashes, shingle_n, hash_family=hash_family),
+        n_hashes,
+        bands,
+        portable=portable,
+    )
 
-        vs_corpus = (
-            new_sigs.alias("x")
-            .join(
-                corp_sigs.alias("y"),
-                (F.col("x.band") == F.col("y.band")) & (F.col("x.bucket") == F.col("y.bucket")),
-            )
-            .select(F.col("x.doc_id").alias("doc_id"), F.col("y.doc_id").alias("cand"))
+    vs_corpus = (
+        new_sigs.alias("x")
+        .join(
+            corp_sigs.alias("y"),
+            (F.col("x.band") == F.col("y.band")) & (F.col("x.bucket") == F.col("y.bucket")),
         )
-        # rep-level batch matches, BOTH directions: a member of the earlier
-        # group can still point at a later group's rep if that rep id is
-        # below the member's own id
-        vs_batch = (
-            new_sigs.alias("x")
-            .join(
-                new_sigs.alias("y"),
-                (F.col("x.band") == F.col("y.band"))
-                & (F.col("x.bucket") == F.col("y.bucket"))
-                & (F.col("x.doc_id") != F.col("y.doc_id")),
-            )
-            .select(F.col("x.doc_id").alias("doc_id"), F.col("y.doc_id").alias("cand"))
+        .select(F.col("x.doc_id").alias("doc_id"), F.col("y.doc_id").alias("cand"))
+    )
+    # rep-level batch matches, BOTH directions: a member of the earlier
+    # group can still point at a later group's rep if that rep id is
+    # below the member's own id
+    vs_batch = (
+        new_sigs.alias("x")
+        .join(
+            new_sigs.alias("y"),
+            (F.col("x.band") == F.col("y.band"))
+            & (F.col("x.bucket") == F.col("y.bucket"))
+            & (F.col("x.doc_id") != F.col("y.doc_id")),
         )
+        .select(F.col("x.doc_id").alias("doc_id"), F.col("y.doc_id").alias("cand"))
+    )
 
-        new_sh = new_reps.select("doc_id", hashed_sh.alias("sa")).withColumn("sza", F.size("sa"))
-        # candidate side may come from either rep table; union their shingle sets
-        cand_sh = (
-            corp_reps.select("doc_id", hashed_sh.alias("sb"))
-            .unionByName(new_reps.select("doc_id", hashed_sh.alias("sb")))
-            .withColumn("szb", F.size("sb"))
-            .withColumnRenamed("doc_id", "cand")
-        )
-        inter = F.size(F.array_intersect(F.col("sa"), F.col("sb")))
-        jaccard = inter.cast("double") / (F.col("sza") + F.col("szb") - inter).cast("double")
-        corp_verified = (
-            vs_corpus.distinct()
-            .join(new_sh, "doc_id")
-            .join(cand_sh, "cand")
-            .filter(jaccard >= threshold)
-            .groupBy("doc_id")
-            .agg(F.min("cand").alias("corp_min"))
-            .withColumnRenamed("doc_id", "rep_id")
-        )
-        batch_verified = (
-            vs_batch.distinct()
-            .join(new_sh, "doc_id")
-            .join(cand_sh, "cand")
-            .filter(jaccard >= threshold)
-            .select(F.col("doc_id").alias("rep_id"), "cand")
-        )
+    new_sh = new_reps.select("doc_id", hashed_sh.alias("sa")).withColumn("sza", F.size("sa"))
+    # candidate side may come from either rep table; union their shingle sets
+    cand_sh = (
+        corp_reps.select("doc_id", hashed_sh.alias("sb"))
+        .unionByName(new_reps.select("doc_id", hashed_sh.alias("sb")))
+        .withColumn("szb", F.size("sb"))
+        .withColumnRenamed("doc_id", "cand")
+    )
+    inter = F.size(F.array_intersect(F.col("sa"), F.col("sb")))
+    jaccard = inter.cast("double") / (F.col("sza") + F.col("szb") - inter).cast("double")
+    corp_verified = (
+        vs_corpus.distinct()
+        .join(new_sh, "doc_id")
+        .join(cand_sh, "cand")
+        .filter(jaccard >= threshold)
+        .groupBy("doc_id")
+        .agg(F.min("cand").alias("corp_min"))
+        .withColumnRenamed("doc_id", "rep_id")
+    )
+    batch_verified = (
+        vs_batch.distinct()
+        .join(new_sh, "doc_id")
+        .join(cand_sh, "cand")
+        .filter(jaccard >= threshold)
+        .select(F.col("doc_id").alias("rep_id"), "cand")
+    )
     members = newg.select("doc_id", "rep_id")
     # candidate earlier-new reps per member: matching other groups' reps
     # plus the member's own rep; only ids strictly below the member count

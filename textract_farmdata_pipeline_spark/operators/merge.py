@@ -11,13 +11,13 @@ Two layers:
 
 * :class:`ParquetMergeTable` — copy-on-write table layout with
   manifest-based snapshots: ``files/`` holds immutable parquet files,
-  ``_manifests/v{N}.json`` lists the files of snapshot N, and
-  ``_changes/v{N}/`` holds that commit's changelog.  A merge rewrites
-  ONLY the files that contain matched keys (file pruning via a semi
-  join on ``_metadata.file_path``); untouched files are carried into
-  the new manifest by reference.  At 100 TB, a merge touching 0.1% of
-  keys rewrites ~0.1% of the data — the same economics as Delta/
-  Iceberg copy-on-write, built from parquet + JSON.
+  ``_manifests/v{N}.json`` lists the files of snapshot N and names
+  the ``_changes/`` directory that holds that commit's changelog.  A
+  merge rewrites ONLY the files that contain matched keys (file
+  pruning via a semi join on ``_metadata.file_path``); untouched files
+  are carried into the new manifest by reference.  At 100 TB, a
+  merge touching 0.1% of keys rewrites ~0.1% of the data — the same
+  economics as Delta/Iceberg copy-on-write, built from parquet + JSON.
 
 The reference has no notion of mutation (it only ever writes fresh
 CSVs, lambda_function.py:769-774); this operator covers the north-star
@@ -29,13 +29,29 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 CHANGE_COL = "_change_type"
+
+
+def _assert_aligned(target: StructType, source: StructType) -> None:
+    """Target and source must agree on column names AND types: a commit
+    writes files of the source's types under the table's recorded
+    schema, so a wider source type (long into int) would make every
+    later pinned read fail, and the pure-insert path would silently
+    narrow it.  simpleString ignores nullability metadata, which
+    parquet round-trips loosely."""
+    t_fields = [(f.name, f.dataType.simpleString()) for f in target.fields]
+    s_fields = [(f.name, f.dataType.simpleString()) for f in source.fields]
+    assert t_fields == s_fields, (
+        f"target/source schemas must align: {t_fields} != {s_fields}"
+    )
 
 
 def _nullsafe_ne(a: str, b: str, cols: list[str]) -> F.Column:
@@ -153,12 +169,30 @@ class ParquetMergeTable:
     Layout::
 
         <path>/files/<uuid>.parquet      immutable data files
-        <path>/_manifests/v{N}.json      {"version": N, "files": [...]}
-        <path>/_changes/v{N}/            changelog of commit N (parquet)
+        <path>/_manifests/v{N}.json      {"version": N, "files": [...],
+                                          "schema": <StructType json>,
+                                          "changes": "v{N}-<uuid>"}
+        <path>/_changes/v{N}-<uuid>/     changelog of commit N (parquet)
 
     Readers pin a manifest, so concurrent reads never see a partial
-    commit; the manifest write is the atomic commit point (a rename on
-    real object stores).
+    commit.  The manifest write is the atomic commit point and is
+    exclusive: ``v{N}.json`` is published with a hard link, which fails
+    if the name exists, so of two writers that both claim version N
+    exactly one wins and the other raises ``FileExistsError``
+    (optimistic concurrency — a put-if-absent on object stores).  Each
+    writer puts its changelog in a directory of its own and the
+    manifest names it, so the losing writer never touches the winner's
+    change feed (it removes its own directory when it loses).
+    Manifests without a ``changes`` key (older tables, and versions
+    whose manifest :meth:`vacuum` expired) keep it in ``_changes/v{N}/``.
+
+    ``schema`` is the table schema, recorded by :meth:`create` and
+    carried by every later commit.  Every scan of the table's files
+    passes it to ``spark.read.schema``, so no read runs a parquet
+    footer-inference job; manifests written without the key fall back
+    to inference.  Together with the broadcast file probe in
+    :meth:`merge`, a commit's plan is its source plan plus broadcast
+    semi-joins and the writes.
     """
 
     def __init__(self, spark: SparkSession, path: str):
@@ -182,12 +216,76 @@ class ParquetMergeTable:
         with open(os.path.join(self._manifest_dir(), f"v{version}.json")) as fh:
             return json.load(fh)
 
-    def _write_manifest(self, version: int, files: list[str]) -> None:
-        os.makedirs(self._manifest_dir(), exist_ok=True)
-        tmp = os.path.join(self._manifest_dir(), f".v{version}.json.tmp")
+    def _write_manifest(
+        self,
+        version: int,
+        files: list[str],
+        schema: str | None,
+        changes: str | None = None,
+    ) -> None:
+        """Publish snapshot ``version``; ``schema`` is the table's
+        ``StructType.json()`` and ``changes`` the name of this commit's
+        changelog directory under ``_changes/`` (from
+        :meth:`_new_changes_name`; None for a commit without one).  The
+        body goes to a writer-private temp file first and is then
+        hard-linked to ``v{N}.json``: the link is atomic and refuses an
+        existing name, so a concurrent writer that claimed the same
+        version loses loudly instead of silently replacing the winner's
+        snapshot, and deletes the changelog it wrote."""
+        d = self._manifest_dir()
+        os.makedirs(d, exist_ok=True)
+        body = {"version": version, "files": files, "ts": time.time()}
+        if schema is not None:
+            body["schema"] = schema
+        if changes is not None:
+            body["changes"] = changes
+        tmp = os.path.join(d, f".v{version}.{uuid.uuid4().hex}.json.tmp")
         with open(tmp, "w") as fh:
-            json.dump({"version": version, "files": files, "ts": time.time()}, fh)
-        os.replace(tmp, os.path.join(self._manifest_dir(), f"v{version}.json"))
+            json.dump(body, fh)
+        try:
+            os.link(tmp, os.path.join(d, f"v{version}.json"))
+        except FileExistsError:
+            if changes is not None:
+                shutil.rmtree(
+                    os.path.join(self.path, "_changes", changes), ignore_errors=True
+                )
+            raise FileExistsError(
+                f"{self.path}: version {version} was committed by another writer"
+            ) from None
+        finally:
+            os.remove(tmp)
+
+    def _new_changes_name(self, version: int) -> str:
+        """A changelog directory name for commit ``version`` that no
+        other writer can pick."""
+        return f"v{version}-{uuid.uuid4().hex}"
+
+    def _changes_dir(self, version: int) -> str:
+        """The changelog directory of commit ``version``: the one its
+        manifest names, else ``_changes/v{N}``."""
+        try:
+            name = self._read_manifest(version).get("changes", f"v{version}")
+        except FileNotFoundError:  # expired by vacuum()
+            name = f"v{version}"
+        return os.path.join(self.path, "_changes", name)
+
+    def _scan(self, files: list[str], schema: str | None) -> DataFrame:
+        """Read parquet ``files`` under the recorded table ``schema``
+        (no footer-inference job); infer only for manifests that
+        predate the schema key."""
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(StructType.fromJson(json.loads(schema)))
+        return reader.parquet(*files)
+
+    def schema(self, version: int | None = None) -> StructType:
+        """The table schema as of ``version`` (default latest), taken
+        from the manifest without running a Spark job; manifests that
+        predate the schema key fall back to parquet inference."""
+        m = self._read_manifest(version or self.latest_version())
+        if "schema" in m:
+            return StructType.fromJson(json.loads(m["schema"]))
+        return self._scan(m["files"], None).schema
 
     def _new_data_files(self, df: DataFrame) -> list[str]:
         """Write df into files/ under a fresh subdirectory; return the
@@ -212,19 +310,18 @@ class ParquetMergeTable:
         # 0-partition frame, which is a caller bug to surface, not state
         # to corrupt.
         assert files, "create() wrote no parquet part files"
-        self._write_manifest(1, files)
+        self._write_manifest(1, files, df.schema.json())
         return 1
 
     def read(self, version: int | None = None) -> DataFrame:
-        v = version or self.latest_version()
-        files = self._read_manifest(v)["files"]
-        return self.spark.read.parquet(*files)
+        m = self._read_manifest(version or self.latest_version())
+        return self._scan(m["files"], m.get("schema"))
 
     def read_changes(self, from_version: int, to_version: int | None = None) -> DataFrame:
         to_v = to_version or self.latest_version()
         out: DataFrame | None = None
         for v in range(from_version, to_v + 1):
-            d = os.path.join(self.path, "_changes", f"v{v}")
+            d = self._changes_dir(v)
             if not os.path.isdir(d):
                 continue
             part = self.spark.read.parquet(d).withColumn("_commit_version", F.lit(v))
@@ -262,10 +359,17 @@ class ParquetMergeTable:
           label (byte-identical rows, zero recompute);
         * otherwise the annotated join is persisted once and snapshot +
           changelog both derive from the cache.
+
+        The touched-file probe is a broadcast semi join of the target
+        against the source's key column, so the stored table is never
+        shuffled (the source's keys must fit a broadcast; every caller
+        merges a batch-sized source); every scan of the table's files
+        reads under the manifest's recorded schema.
         """
         version = self.latest_version()
         assert version > 0, "create() first"
-        old_files = self._read_manifest(version)["files"]
+        manifest = self._read_manifest(version)
+        old_files = manifest["files"]
 
         from pyspark import StorageLevel
 
@@ -273,32 +377,19 @@ class ParquetMergeTable:
         if own_cache:
             source = source.persist()
         try:
-            target = self.spark.read.parquet(*old_files).withColumn(
+            target = self._scan(old_files, manifest.get("schema")).withColumn(
                 "_file", F.col("_metadata.file_path")
             )
-            # Names AND types (r13 ADVICE): the pure-insert fast path
-            # writes source rows cast to the stored types, and a type
-            # mismatch there would silently narrow (long→int overflow)
-            # where the join path used to widen.  simpleString ignores
-            # nullability metadata, which parquet round-trips loosely.
-            t_fields = [
-                (f.name, f.dataType.simpleString())
-                for f in target.schema.fields[:-1]
-            ]
-            s_fields = [
-                (f.name, f.dataType.simpleString())
-                for f in source.schema.fields
-            ]
-            assert t_fields == s_fields, (
-                f"target/source schemas must align: {t_fields} != {s_fields}"
-            )
-            keys = source.select(key).distinct()
-            # File pruning: a file is "touched" iff it holds a matched key.
+            schema = manifest.get("schema") or target.drop("_file").schema.json()
+            _assert_aligned(target.drop("_file").schema, source.schema)
+            # File pruning: a file is "touched" iff it holds a matched key
+            # (null-unsafe equality, like any equi-join).  The source side
+            # is broadcast as is — a semi join needs no distinct keys.
             # _metadata.file_path is a URI (file:///...); compare on the
             # normalized local path.
             touched_uris = [
                 r["_file"]
-                for r in target.join(keys, key, "left_semi")
+                for r in target.join(F.broadcast(source.select(key)), key, "left_semi")
                 .select("_file")
                 .distinct()
                 .collect()
@@ -312,7 +403,8 @@ class ParquetMergeTable:
                 f for f in old_files if os.path.abspath(f) not in touched_paths
             ]
             cols = source.columns
-            changes_dir = os.path.join(self.path, "_changes", f"v{version + 1}")
+            changes = self._new_changes_name(version + 1)
+            changes_dir = os.path.join(self.path, "_changes", changes)
 
             if not touched_uris:
                 # Pure insert: no stored key matches any source key, so
@@ -329,7 +421,7 @@ class ParquetMergeTable:
                 )
                 new_files = self._new_data_files(aligned)
                 if new_files:
-                    changelog = self.spark.read.parquet(*new_files).withColumn(
+                    changelog = self._scan(new_files, schema).withColumn(
                         CHANGE_COL, F.lit("insert")
                     )
                 else:  # empty source still commits an (empty) changelog
@@ -351,7 +443,9 @@ class ParquetMergeTable:
                     ).parquet(changes_dir)
                 finally:
                     annotated.unpersist()
-            self._write_manifest(version + 1, kept_files + new_files)
+            self._write_manifest(
+                version + 1, kept_files + new_files, schema, changes
+            )
         finally:
             if own_cache:
                 source.unpersist()
@@ -377,18 +471,30 @@ class ParquetMergeTable:
         for the changelog.  No driver collect, no full-outer join over
         ``__t_*/__s_*`` doubled columns, no persist bookkeeping.
         Idempotent like the OR itself: re-applying a delta yields an
-        empty changelog and an identical snapshot.
+        empty changelog and an identical snapshot.  The delta's column
+        names and types must match the table's, as in :meth:`merge`.
+
+        The delta is OR-aggregated by key first, so a delta that
+        repeats a key still yields one changelog row per key, matching
+        the snapshot.  Keys must be NON-NULL, as in :meth:`merge`: the
+        changelog join matches keys null-unsafely.
         """
         version = self.latest_version()
         assert version > 0, "create() first"
-        old_files = self._read_manifest(version)["files"]
-        target = self.spark.read.parquet(*old_files)
+        manifest = self._read_manifest(version)
+        target = self._scan(manifest["files"], manifest.get("schema"))
+        schema = manifest.get("schema") or target.schema.json()
         cols = target.columns
-        assert cols == delta.columns and set(cols) == {key, bits_col}, (
+        _assert_aligned(target.schema, delta.schema)
+        assert set(cols) == {key, bits_col}, (
             "upsert_or expects exactly (key, bits) columns on both sides"
         )
 
-        delta = delta.persist()  # filter-sized: ≤ m_bits/32 rows
+        delta = (  # filter-sized: ≤ m_bits/32 rows
+            delta.groupBy(key).agg(F.bit_or(bits_col).alias(bits_col))
+            .select(*cols)
+            .persist()
+        )
         try:
             snapshot = (
                 target.unionByName(delta)
@@ -422,11 +528,11 @@ class ParquetMergeTable:
                 merged_bits.alias(bits_col),
                 F.lit("update_postimage").alias(CHANGE_COL),
             )
-            changes_dir = os.path.join(self.path, "_changes", f"v{version + 1}")
+            changes = self._new_changes_name(version + 1)
             inserts.unionByName(pre).unionByName(post).write.mode(
                 "overwrite"
-            ).parquet(changes_dir)
-            self._write_manifest(version + 1, new_files)
+            ).parquet(os.path.join(self.path, "_changes", changes))
+            self._write_manifest(version + 1, new_files, schema, changes)
         finally:
             delta.unpersist()
         return version + 1
@@ -449,8 +555,9 @@ class ParquetMergeTable:
         """
         version = self.latest_version()
         assert version > 0, "create() first"
-        files = self._read_manifest(version)["files"]
-        sized = [(f, os.path.getsize(f)) for f in files]
+        manifest = self._read_manifest(version)
+        schema = manifest.get("schema")
+        sized = [(f, os.path.getsize(f)) for f in manifest["files"]]
         keep = [f for f, sz in sized if sz >= target_file_bytes // 2]
         small = sorted(
             ((f, sz) for f, sz in sized if sz < target_file_bytes // 2),
@@ -474,11 +581,11 @@ class ParquetMergeTable:
             if len(members) == 1:  # nothing gained by rewriting a lone file
                 keep.extend(members)
                 continue
-            df = self.spark.read.parquet(*members).coalesce(1)
+            df = self._scan(members, schema).coalesce(1)
             new_files.extend(self._new_data_files(df))
         if not new_files:
             return version
-        self._write_manifest(version + 1, keep + new_files)
+        self._write_manifest(version + 1, keep + new_files, schema)
         return version + 1
 
     def vacuum(self, retain_last: int = 1) -> int:
@@ -489,7 +596,9 @@ class ParquetMergeTable:
         file under ``files/`` that none of them references is deleted,
         and the expired manifests are removed so ``read(version=old)``
         fails fast instead of resolving to missing files.  Changelogs
-        are NOT touched — CDC history stays replayable.
+        are NOT deleted — CDC history stays replayable: an expired
+        commit's changelog moves to ``_changes/v{N}/``, where
+        :meth:`read_changes` finds it without the manifest.
 
         Returns the number of data files deleted.
         """
@@ -515,8 +624,14 @@ class ParquetMergeTable:
                 os.rmdir(d)
         for v in range(1, retained.start):
             m = os.path.join(self._manifest_dir(), f"v{v}.json")
-            if os.path.exists(m):
-                os.remove(m)
+            if not os.path.exists(m):
+                continue
+            changes = self._read_manifest(v).get("changes")
+            if changes is not None:
+                expired = os.path.join(self.path, "_changes", f"v{v}")
+                shutil.rmtree(expired, ignore_errors=True)  # stale, unnamed
+                os.rename(os.path.join(self.path, "_changes", changes), expired)
+            os.remove(m)
         return deleted
 
     def stream_upsert(
@@ -536,8 +651,12 @@ class ParquetMergeTable:
         meaningless after a shuffle).  Without it the batch must be
         unique per key.  Stream columns beyond the table's schema
         (sequence numbers, CDC metadata) are dropped after the winner
-        is picked.  Returns the ``DataStreamWriter`` — caller adds
-        trigger/checkpoint and starts it.
+        is picked.  Each batch's keys are broadcast by :meth:`merge`'s
+        file probe, so a batch's key column must fit in driver and
+        executor memory; bound the batch size with the source's
+        ``maxFilesPerTrigger``/``maxOffsetsPerTrigger``.  Returns the
+        ``DataStreamWriter`` — caller adds trigger/checkpoint and
+        starts it.
         """
         table_cols = self.read().columns
 

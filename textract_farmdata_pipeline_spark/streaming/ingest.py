@@ -44,24 +44,24 @@ def dedup_ingest_stream(
     stream-equals-batch test pins that streaming admission in K batches
     equals one batch :func:`incremental_minhash_dedup` pass per batch
     prefix.
+
+    At ``threshold == 1.0`` (the exact-set path) the corpus state table
+    additionally stores each admitted row's sorted shingle-set key
+    ``k``, so the per-batch match READS keys instead of re-tokenizing
+    the accumulated corpus every micro-batch.  The batch is annotated
+    by the one-exchange exact-set plan, which carries ``text`` and
+    ``k`` beside ``dup_of``; the novel rows are taken straight from
+    that persisted annotation, so the batch is neither re-joined nor
+    re-keyed for the commit.  The sink still sees ``(doc_id,
+    dup_of)``.  Resuming over a state table written at the other side
+    of ``threshold == 1.0`` (``k`` missing, or present when not
+    expected) raises ``ValueError`` here, before the stream starts.
     """
-    from ..operators.dedup import incremental_minhash_dedup, sorted_shingle_key
+    from ..operators.dedup import _exact_set_annotation, incremental_minhash_dedup
     from ..operators.merge import ParquetMergeTable
 
-    # At threshold == 1.0 (the exact-set fast path) the corpus state
-    # table additionally stores each admitted row's sorted shingle-set
-    # key, so the per-batch match READS keys instead of re-tokenizing
-    # the accumulated corpus every micro-batch — the O(corpus)/batch
-    # re-shingle was the streaming path's real scale cost (r13 verdict
-    # #4).  One definition (sorted_shingle_key) computes the stored key
-    # and the match-side key, so they can never drift; the replay's
-    # returned projection hides the column.
     exact = threshold == 1.0
-    key_expr = (
-        sorted_shingle_key(F.col("text"), shingle_n, "xxhash64")
-        if exact
-        else None
-    )
+    _check_state_key_col(docs.sparkSession, corpus_path, exact, threshold)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -76,21 +76,28 @@ def dedup_ingest_stream(
         else:
             corpus = spark.createDataFrame([], "doc_id long, text string")
             exists = False
-        ann = incremental_minhash_dedup(
-            corpus,
-            batch_df.select("doc_id", "text"),
-            n_hashes=n_hashes,
-            bands=bands,
-            threshold=threshold,
-            shingle_n=shingle_n,
-            corpus_keys=corpus_keys,
-        ).persist()  # consumed twice (admission join + sink); batch-sized
-        try:
-            novel = batch_df.select("doc_id", "text").join(
+        batch = batch_df.select("doc_id", "text")
+        if exact:
+            full = _exact_set_annotation(
+                corpus, batch, shingle_n, "xxhash64", corpus_keys
+            ).persist()  # consumed twice (commit + sink); batch-sized
+            novel = full.filter(F.col("dup_of").isNull()).select(
+                "doc_id", "text", "k"
+            )
+            ann = full.select("doc_id", "dup_of")
+        else:
+            full = ann = incremental_minhash_dedup(
+                corpus,
+                batch,
+                n_hashes=n_hashes,
+                bands=bands,
+                threshold=threshold,
+                shingle_n=shingle_n,
+            ).persist()  # consumed twice (admission join + sink); batch-sized
+            novel = batch.join(
                 ann.filter(F.col("dup_of").isNull()).select("doc_id"), "doc_id"
             )
-            if exact:
-                novel = novel.withColumn("k", key_expr)
+        try:
             if exists:
                 table.merge(novel, key="doc_id")
             else:
@@ -101,9 +108,37 @@ def dedup_ingest_stream(
             if sink is not None:
                 sink(ann, batch_id)
         finally:
-            ann.unpersist()
+            full.unpersist()
 
     return docs.writeStream.foreachBatch(process)
+
+
+def _check_state_key_col(
+    spark, state_path: str, exact: bool, threshold: float
+) -> None:
+    """Fail fast when a resumed stream's state table does not match
+    its threshold: the exact-set path (``threshold == 1.0``) reads a
+    stored ``k`` key column, every other threshold writes rows without
+    one.  Reads only the manifest's recorded schema — no Spark job —
+    so a mismatch surfaces before the first micro-batch instead of as
+    a column-resolution error inside it."""
+    from ..operators.merge import ParquetMergeTable
+
+    if not os.path.isdir(os.path.join(state_path, "_manifests")):
+        return
+    has_k = "k" in ParquetMergeTable(spark, state_path).schema().fieldNames()
+    if exact and not has_k:
+        raise ValueError(
+            f"state table {state_path} has no 'k' column, which "
+            f"threshold={threshold} (the exact-set path) requires; it was "
+            "written at another threshold"
+        )
+    if has_k and not exact:
+        raise ValueError(
+            f"state table {state_path} has a 'k' column, which only "
+            f"threshold=1.0 writes; resuming it at threshold={threshold} "
+            "would break its schema"
+        )
 
 
 def _stage_batch_files(
@@ -255,7 +290,9 @@ def split_ingest_stream(
     :func:`dedup_ingest_stream`.  ``sink(ann, batch_id)`` observes
     each batch's decisions.  On the first batch the state is empty and
     every cluster resolves 'fresh' — which is exactly the one-shot
-    split, so the stream needs no separate bootstrap path."""
+    split, so the stream needs no separate bootstrap path.  Resuming
+    over a state table written at the other side of ``threshold ==
+    1.0`` raises ``ValueError``, as in :func:`dedup_ingest_stream`."""
     from ..operators.dedup import incremental_split_batch, sorted_shingle_key
     from ..operators.merge import ParquetMergeTable
 
@@ -264,6 +301,7 @@ def split_ingest_stream(
     # the per-batch exact-set match reads keys instead of re-shingling
     # the accumulated state (r13 verdict #4).
     exact = threshold == 1.0
+    _check_state_key_col(docs.sparkSession, state_path, exact, threshold)
     key_expr = (
         sorted_shingle_key(F.col("text"), shingle_n, hash_family)
         if exact

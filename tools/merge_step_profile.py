@@ -40,14 +40,14 @@ def main() -> None:
 
         t0 = t()
         version = self.latest_version()
-        old_files = self._read_manifest(version)["files"]
-        target = self.spark.read.parquet(*old_files).withColumn(
+        manifest = self._read_manifest(version)
+        old_files = manifest["files"]
+        target = self._scan(old_files, manifest.get("schema")).withColumn(
             "_file", F.col("_metadata.file_path")
         )
-        keys = source.select(key).distinct()
         touched_uris = [
             r["_file"]
-            for r in target.join(keys, key, "left_semi")
+            for r in target.join(F.broadcast(source.select(key)), key, "left_semi")
             .select("_file")
             .distinct()
             .collect()
@@ -69,10 +69,14 @@ def main() -> None:
         new_files = self._new_data_files(snapshot_part)
         STEPS["snapshot_write"].append(t() - t1)
         t2 = t()
-        changes_dir = os.path.join(self.path, "_changes", f"v{version + 1}")
-        changelog.write.mode("overwrite").parquet(changes_dir)
+        changes = self._new_changes_name(version + 1)
+        changelog.write.mode("overwrite").parquet(
+            os.path.join(self.path, "_changes", changes)
+        )
         STEPS["changelog_write"].append(t() - t2)
-        self._write_manifest(version + 1, kept_files + new_files)
+        self._write_manifest(
+            version + 1, kept_files + new_files, manifest.get("schema"), changes
+        )
         STEPS["n_touched"].append(len(touched_uris))
         return version + 1
 
