@@ -210,3 +210,127 @@ def test_maintenance_commits_carry_schema(spark, tmp_path, fn):
     assert v == 2
     assert tbl._read_manifest(2)["schema"] == tbl._read_manifest(1)["schema"]
     assert tbl.read().count() == 8 + (fn == "upsert_or")
+
+
+def _rows(tbl):
+    return sorted(tuple(r) for r in tbl.read().collect())
+
+
+def test_commit_creates_then_merges(spark, tmp_path):
+    """``commit`` is create-if-absent, else merge: the first commit
+    writes v1 under the frame's schema, the second merges to v2 with an
+    insert/update change feed."""
+    from textract_farmdata_pipeline_spark.operators.merge import ParquetMergeTable
+
+    tbl = ParquetMergeTable(spark, str(tmp_path / "t"))
+    assert not tbl.exists()
+    first = spark.createDataFrame([(1, "a"), (2, "b")], SCHEMA).coalesce(1)
+    assert tbl.commit(first, key="k") == 1
+    assert tbl.exists()
+    assert tbl.schema().simpleString() == first.schema.simpleString()
+    assert _rows(tbl) == [(1, "a"), (2, "b")]
+
+    assert tbl.commit(spark.createDataFrame([(2, "B"), (3, "c")], SCHEMA), key="k") == 2
+    assert _rows(tbl) == [(1, "a"), (2, "B"), (3, "c")]
+    assert sorted(tuple(r) for r in tbl.read_changes(2).collect()) == [
+        (2, "B", "update_postimage", 2),
+        (2, "b", "update_preimage", 2),
+        (3, "c", "insert", 2),
+    ]
+
+
+def test_commit_dispatches_through_create_and_merge(spark, tmp_path, monkeypatch):
+    """Profilers time commits by replacing ``ParquetMergeTable.create``
+    and ``.merge`` on the class; ``commit`` must reach those wrappers."""
+    from textract_farmdata_pipeline_spark.operators.merge import ParquetMergeTable
+
+    calls = []
+    for name in ("create", "merge"):
+        orig = getattr(ParquetMergeTable, name)
+
+        def wrapped(self, *a, _orig=orig, _name=name, **kw):
+            calls.append(_name)
+            return _orig(self, *a, **kw)
+
+        monkeypatch.setattr(ParquetMergeTable, name, wrapped)
+    tbl = ParquetMergeTable(spark, str(tmp_path / "t"))
+    tbl.commit(spark.createDataFrame([(1, "a")], SCHEMA), key="k")
+    tbl.commit(spark.createDataFrame([(2, "b")], SCHEMA), key="k")
+    assert calls == ["create", "merge"]
+
+
+def test_crash_before_first_manifest_does_not_wedge(spark, tmp_path, monkeypatch):
+    """A first ``create`` that dies inside ``_write_manifest`` after the
+    ``_manifests/`` directory exists but before ``v1.json`` is linked
+    leaves a table that does not exist: the next commit creates it."""
+    from textract_farmdata_pipeline_spark.operators import merge as merge_mod
+
+    tbl = merge_mod.ParquetMergeTable(spark, str(tmp_path / "t"))
+    df = spark.createDataFrame([(1, "a")], SCHEMA).coalesce(1)
+
+    def crash(src, dst):
+        raise OSError("crash before publish")
+
+    with monkeypatch.context() as m:
+        m.setattr(merge_mod.os, "link", crash)
+        with pytest.raises(OSError, match="crash before publish"):
+            tbl.commit(df, key="k")
+    assert os.path.isdir(tbl._manifest_dir())
+    assert os.listdir(tbl._manifest_dir()) == []  # temp file removed
+    assert not tbl.exists()
+    assert tbl.commit(df, key="k") == 1
+    assert _rows(tbl) == [(1, "a")]
+
+
+def test_crash_between_changelog_and_manifest(spark, tmp_path):
+    """A merge that dies after writing its data files and changelog but
+    before publishing ``v{N+1}.json``: readers still see version N, the
+    replayed merge commits N+1 whose change feed is exactly the retry's
+    rows, and ``vacuum`` deletes the crashed attempt's orphan files."""
+    from textract_farmdata_pipeline_spark.operators.merge import ParquetMergeTable
+
+    path = str(tmp_path / "t")
+    tbl = _table(spark, path, [(1, "a"), (2, "b")])
+    assert tbl.merge(spark.createDataFrame([(3, "c")], SCHEMA), key="k") == 2
+    before = _rows(tbl)
+
+    class Crashing(ParquetMergeTable):
+        def _write_manifest(self, *args, **kwargs):
+            raise OSError("crash before publish")
+
+    def data_files():
+        root = os.path.join(path, "files")
+        return {
+            os.path.join(root, d, f)
+            for d in os.listdir(root)
+            for f in os.listdir(os.path.join(root, d))
+            if f.endswith(".parquet")
+        }
+
+    def referenced(versions):
+        return {
+            os.path.abspath(f)
+            for v in versions
+            for f in tbl._read_manifest(v)["files"]
+        }
+
+    source = spark.createDataFrame([(1, "A"), (4, "d")], SCHEMA)
+    with pytest.raises(OSError, match="crash before publish"):
+        Crashing(spark, path).merge(source, key="k")
+    assert tbl.latest_version() == 2
+    assert _rows(tbl) == before
+    orphans = data_files() - referenced([1, 2])
+    assert orphans  # the crashed attempt wrote its data files
+
+    assert tbl.merge(source, key="k") == 3  # the foreachBatch replay
+    assert _rows(tbl) == [(1, "A"), (2, "b"), (3, "c"), (4, "d")]
+    assert sorted(tuple(r) for r in tbl.read_changes(3).collect()) == [
+        (1, "A", "update_postimage", 3),
+        (1, "a", "update_preimage", 3),
+        (4, "d", "insert", 3),
+    ]
+
+    assert not orphans & referenced([1, 2, 3])
+    assert tbl.vacuum(retain_last=3) == len(orphans)
+    assert not any(os.path.exists(f) for f in orphans)
+    assert _rows(tbl) == [(1, "A"), (2, "b"), (3, "c"), (4, "d")]

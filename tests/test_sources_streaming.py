@@ -1073,6 +1073,40 @@ class TestIngestReplay:
         # invariant: one admitted doc per distinct text.
         assert len(admitted) == incoming.select("text").distinct().count()
 
+    def test_empty_manifest_dir_starts_fresh(self, spark, tmp_path, sf_dir):
+        """A ``_manifests/`` directory without any ``v*.json`` (a first
+        create that crashed before publishing) must not wedge the
+        stream: the replay admits exactly what a clean run admits."""
+        import os
+
+        from textract_farmdata_pipeline_spark.streaming import (
+            replay_ingest_batches,
+        )
+
+        docs = (
+            spark.read.parquet(f"{sf_dir}/documents.parquet")
+            .filter(F.col("doc_id") < 30)
+            .select("doc_id", "text")
+        )
+        planted = docs.filter(F.col("doc_id") < 10).withColumn(
+            "doc_id", F.col("doc_id") + 1000
+        )
+        incoming = docs.unionByName(planted)
+
+        def admitted(workdir):
+            return {
+                r["doc_id"]
+                for r in replay_ingest_batches(
+                    incoming, workdir, k_batches=3, threshold=1.0
+                ).collect()
+            }
+
+        crashed = tmp_path / "crashed"
+        os.makedirs(crashed / "corpus" / "_manifests")
+        clean = admitted(str(tmp_path / "clean"))
+        assert len(clean) == 30  # one admitted doc per distinct text
+        assert admitted(str(crashed)) == clean
+
 
 class TestStreamingIngestDedup:
     def test_cross_batch_admission_and_dup_mapping(self, spark, tmp_path):

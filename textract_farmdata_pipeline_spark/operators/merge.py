@@ -18,6 +18,9 @@ Two layers:
   are carried into the new manifest by reference.  At 100 TB, a
   merge touching 0.1% of keys rewrites ~0.1% of the data — the same
   economics as Delta/Iceberg copy-on-write, built from parquet + JSON.
+  :meth:`~ParquetMergeTable.commit` (create if absent, else merge) is
+  the one write streaming handlers use, so the manifest layout stays
+  inside this module.
 
 The reference has no notion of mutation (it only ever writes fresh
 CSVs, lambda_function.py:769-774); this operator covers the north-star
@@ -312,6 +315,25 @@ class ParquetMergeTable:
         assert files, "create() wrote no parquet part files"
         self._write_manifest(1, files, df.schema.json())
         return 1
+
+    def exists(self) -> bool:
+        """Whether a snapshot has been published.  A ``_manifests/``
+        directory that holds no ``v*.json`` (a first :meth:`create` that
+        crashed before its manifest landed) does not count, so the next
+        :meth:`commit` creates the table afresh."""
+        return self.latest_version() > 0
+
+    def commit(self, df: DataFrame, key: str) -> int:
+        """Create the table from ``df`` if it does not exist yet, else
+        MERGE ``df`` in on ``key``; returns the new version.  The one
+        commit rule of every streaming-ingest handler: the first batch
+        creates unconditionally (an empty frame writes a schema-only
+        part file, so no ``isEmpty`` job), every later one merges.
+        Dispatches through ``self.create``/``self.merge``, so wrappers
+        installed on the class see every commit."""
+        if self.exists():
+            return self.merge(df, key=key)
+        return self.create(df)
 
     def read(self, version: int | None = None) -> DataFrame:
         m = self._read_manifest(version or self.latest_version())

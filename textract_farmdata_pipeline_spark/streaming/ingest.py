@@ -12,14 +12,33 @@ failure re-upserts the same rows instead of duplicating them
 (foreachBatch is at-least-once; the keyed merge is what makes the
 pipeline effectively exactly-once).  Micro-batch boundaries are the
 consistency points: batch N+1 sees exactly the corpus as of batch N.
+
+Every ingest family in this module follows the same two rules:
+
+* **One commit rule.**  Each state table is written with
+  :meth:`ParquetMergeTable.commit` — create on the first batch (even an
+  empty one), keyed MERGE after — and a handler that reads state first
+  asks :meth:`ParquetMergeTable.exists`.  No handler looks at the
+  table's manifest layout.
+* **One replay harness.**  Each ``replay_*`` function runs its stream
+  through :func:`_replay`: stage ``k_batches`` files, drain them one
+  per trigger with ``availableNow``, drop the batch files and the
+  checkpoint.  A replay states only what differs: frozen artifacts
+  built before staging, its state path, and its final read.
 """
 
 from __future__ import annotations
 
+import atexit
+import glob
 import os
+import shutil
+import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..operators.merge import ParquetMergeTable
 
 
 def dedup_ingest_stream(
@@ -58,7 +77,6 @@ def dedup_ingest_stream(
     expected) raises ``ValueError`` here, before the stream starts.
     """
     from ..operators.dedup import _exact_set_annotation, incremental_minhash_dedup
-    from ..operators.merge import ParquetMergeTable
 
     exact = threshold == 1.0
     _check_state_key_col(docs.sparkSession, corpus_path, exact, threshold)
@@ -67,15 +85,13 @@ def dedup_ingest_stream(
         spark = batch_df.sparkSession
         table = ParquetMergeTable(spark, corpus_path)
         corpus_keys = None
-        if os.path.isdir(os.path.join(corpus_path, "_manifests")):
+        if table.exists():
             state = table.read()
             corpus = state.select("doc_id", "text")
             if exact:
                 corpus_keys = state.select("doc_id", "k")
-            exists = True
         else:
             corpus = spark.createDataFrame([], "doc_id long, text string")
-            exists = False
         batch = batch_df.select("doc_id", "text")
         if exact:
             full = _exact_set_annotation(
@@ -98,13 +114,7 @@ def dedup_ingest_stream(
                 ann.filter(F.col("dup_of").isNull()).select("doc_id"), "doc_id"
             )
         try:
-            if exists:
-                table.merge(novel, key="doc_id")
-            else:
-                # create unconditionally on the first batch (an empty
-                # frame writes a schema-only parquet file) - the
-                # decontam-stream precedent; skips a per-replay isEmpty job
-                table.create(novel)
+            table.commit(novel, key="doc_id")
             if sink is not None:
                 sink(ann, batch_id)
         finally:
@@ -122,11 +132,10 @@ def _check_state_key_col(
     one.  Reads only the manifest's recorded schema — no Spark job —
     so a mismatch surfaces before the first micro-batch instead of as
     a column-resolution error inside it."""
-    from ..operators.merge import ParquetMergeTable
-
-    if not os.path.isdir(os.path.join(state_path, "_manifests")):
+    table = ParquetMergeTable(spark, state_path)
+    if not table.exists():
         return
-    has_k = "k" in ParquetMergeTable(spark, state_path).schema().fieldNames()
+    has_k = "k" in table.schema().fieldNames()
     if exact and not has_k:
         raise ValueError(
             f"state table {state_path} has no 'k' column, which "
@@ -155,10 +164,6 @@ def _stage_batch_files(
     SPARK in one partitionBy pass (the harness must not funnel the
     corpus through the driver); only rename/mtime bookkeeping is
     driver-side."""
-    import glob
-    import shutil
-    import time
-
     src = os.path.join(workdir, "incoming")
     os.makedirs(src, exist_ok=True)
     base_t = time.time() - 3600
@@ -201,6 +206,45 @@ def _stage_batch_files(
     return src
 
 
+def _replay(
+    docs: DataFrame,
+    workdir: str,
+    k_batches: int,
+    start,
+    schema: str = "doc_id long, text string",
+) -> None:
+    """The K-batch replay harness every ``replay_*`` function runs on:
+    stage ``docs``'s ``schema`` columns as ``k_batches`` files under
+    ``workdir`` (:func:`_stage_batch_files`), open a file stream that
+    delivers one file per trigger oldest first, and run the writer
+    ``start(stream)`` returns — with a checkpoint and ``availableNow``
+    — to completion.
+
+    Then reclaim the bulky replay state (batch files + stream
+    checkpoint) immediately and keep only the family's state tables,
+    which the caller reads LAZILY — an eager localCheckpoint there would
+    pin a state-sized block per invocation with no release point (the
+    caller owns the frame), exactly the orphan-block pressure the
+    checkpoints module exists to avoid.  ``workdir`` itself is removed
+    at interpreter exit, so repeated bench/probe runs accumulate nothing
+    across sessions."""
+    cols = tuple(c.split()[0] for c in schema.split(","))
+    src = _stage_batch_files(docs, workdir, k_batches, cols=cols)
+    ckpt = os.path.join(workdir, "ckpt")
+    stream = (
+        docs.sparkSession.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("latestFirst", "false")
+        .parquet(src)
+    )
+    start(stream).option("checkpointLocation", ckpt).trigger(
+        availableNow=True
+    ).start().awaitTermination()
+    shutil.rmtree(src, ignore_errors=True)
+    shutil.rmtree(ckpt, ignore_errors=True)
+    atexit.register(shutil.rmtree, workdir, ignore_errors=True)
+
+
 def replay_ingest_batches(
     docs: DataFrame,
     workdir: str,
@@ -227,46 +271,14 @@ def replay_ingest_batches(
     exact-shingle-set matches count) is expressible as plain SQL over
     the input, giving the streaming path a DuckDB-checkable oracle.
     """
-    src = _stage_batch_files(docs, workdir, k_batches)
     corpus_path = os.path.join(workdir, "corpus")
-    spark = docs.sparkSession
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(src)
+    _replay(docs, workdir, k_batches, lambda s: dedup_ingest_stream(
+        s, corpus_path, n_hashes=n_hashes, bands=bands,
+        threshold=threshold, shingle_n=shingle_n,
+    ))
+    return ParquetMergeTable(docs.sparkSession, corpus_path).read().select(
+        "doc_id", "text"
     )
-    writer = dedup_ingest_stream(
-        stream,
-        corpus_path,
-        n_hashes=n_hashes,
-        bands=bands,
-        threshold=threshold,
-        shingle_n=shingle_n,
-    )
-    q = (
-        writer.option("checkpointLocation", os.path.join(workdir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    import atexit
-    import shutil
-
-    from ..operators.merge import ParquetMergeTable
-
-    # Reclaim the bulky replay state (batch files + stream checkpoint)
-    # immediately; keep only the admitted-corpus table and return a
-    # LAZY read over it — an eager localCheckpoint here would pin an
-    # admitted-corpus-sized block per invocation with no release point
-    # (the caller owns the frame), exactly the orphan-block pressure
-    # the checkpoints module exists to avoid.  The corpus dir itself
-    # is removed at interpreter exit, so repeated bench/probe runs
-    # accumulate nothing across sessions.
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(os.path.join(workdir, "ckpt"), ignore_errors=True)
-    atexit.register(shutil.rmtree, workdir, ignore_errors=True)
-    return ParquetMergeTable(spark, corpus_path).read().select("doc_id", "text")
 
 
 def split_ingest_stream(
@@ -294,7 +306,6 @@ def split_ingest_stream(
     over a state table written at the other side of ``threshold ==
     1.0`` raises ``ValueError``, as in :func:`dedup_ingest_stream`."""
     from ..operators.dedup import incremental_split_batch, sorted_shingle_key
-    from ..operators.merge import ParquetMergeTable
 
     # Same stored-key scheme as dedup_ingest_stream: at threshold ==
     # 1.0 the state table carries each row's sorted shingle-set key so
@@ -312,17 +323,15 @@ def split_ingest_stream(
         spark = batch_df.sparkSession
         table = ParquetMergeTable(spark, state_path)
         corpus_keys = None
-        if os.path.isdir(os.path.join(state_path, "_manifests")):
+        if table.exists():
             stored = table.read()
             state = stored.select("doc_id", "text", "split")
             if exact:
                 corpus_keys = stored.select("doc_id", "k")
-            exists = True
         else:
             state = spark.createDataFrame(
                 [], "doc_id long, text string, split string"
             )
-            exists = False
         ann = incremental_split_batch(
             state,
             batch_df.select("doc_id", "text"),
@@ -339,10 +348,7 @@ def split_ingest_stream(
             )
             if exact:
                 rows = rows.withColumn("k", key_expr)
-            if exists:
-                table.merge(rows, key="doc_id")
-            else:
-                table.create(rows)
+            table.commit(rows, key="doc_id")
             if sink is not None:
                 sink(ann, batch_id)
         finally:
@@ -374,44 +380,13 @@ def replay_split_batches(
     DuckDB oracle the driver hash-checks.  The fixture's max
     distinct-text Jaccard is 0.989 (verified by the ingest replay), so
     no cross-text link fires at 1.0."""
-    import atexit
-    import shutil
-
-    src = _stage_batch_files(docs, workdir, k_batches)
     state_path = os.path.join(workdir, "splits")
-    spark = docs.sparkSession
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(src)
-    )
-    writer = split_ingest_stream(
-        stream,
-        state_path,
-        n_hashes=n_hashes,
-        bands=bands,
-        threshold=threshold,
-        shingle_n=shingle_n,
-        hash_family=hash_family,
-    )
-    q = (
-        writer.option("checkpointLocation", os.path.join(workdir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    from ..operators.merge import ParquetMergeTable
-
-    # same reclamation contract as replay_ingest_batches: drop batch
-    # files + checkpoint now, keep the lazy state read, rm at exit.
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(os.path.join(workdir, "ckpt"), ignore_errors=True)
-    atexit.register(shutil.rmtree, workdir, ignore_errors=True)
-    return (
-        ParquetMergeTable(spark, state_path)
-        .read()
-        .select("doc_id", "split", "origin")
+    _replay(docs, workdir, k_batches, lambda s: split_ingest_stream(
+        s, state_path, n_hashes=n_hashes, bands=bands, threshold=threshold,
+        shingle_n=shingle_n, hash_family=hash_family,
+    ))
+    return ParquetMergeTable(docs.sparkSession, state_path).read().select(
+        "doc_id", "split", "origin"
     )
 
 
@@ -444,7 +419,6 @@ def dsir_ingest_stream(
         dsir_score_against,
         ensure_dsir_weights_nonempty,
     )
-    from ..operators.merge import ParquetMergeTable
 
     # Prepay the empty-artifact guard at stream setup: the artifact is
     # frozen, so the verdict is cached and no micro-batch re-runs the
@@ -456,11 +430,7 @@ def dsir_ingest_stream(
         scored = dsir_score_against(
             batch_df, weights, n=n, buckets=buckets, seed=seed
         )
-        table = ParquetMergeTable(spark, scores_path)
-        if os.path.isdir(os.path.join(scores_path, "_manifests")):
-            table.merge(scored, key="doc_id")
-        else:
-            table.create(scored)
+        ParquetMergeTable(spark, scores_path).commit(scored, key="doc_id")
         if sink is not None:
             sink(scored, batch_id)
 
@@ -490,36 +460,15 @@ def replay_dsir_batches(
     rows-counted (the strongest check any streaming twin here gets).
     """
     from ..operators.corpus import dsir_train_weights
-    from ..operators.merge import ParquetMergeTable
 
-    spark = docs.sparkSession
     weights = dsir_train_weights(
         docs, target, n=n, buckets=buckets, seed=seed
     ).localCheckpoint()  # <= buckets rows; truncates the training scan
-    src = _stage_batch_files(docs, workdir, k_batches)
     scores_path = os.path.join(workdir, "scores")
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(src)
-    )
-    q = (
-        dsir_ingest_stream(
-            stream, weights, scores_path, n=n, buckets=buckets, seed=seed
-        )
-        .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    import atexit
-    import shutil
-
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(os.path.join(workdir, "ckpt"), ignore_errors=True)
-    atexit.register(shutil.rmtree, workdir, ignore_errors=True)
-    return ParquetMergeTable(spark, scores_path).read()
+    _replay(docs, workdir, k_batches, lambda s: dsir_ingest_stream(
+        s, weights, scores_path, n=n, buckets=buckets, seed=seed
+    ))
+    return ParquetMergeTable(docs.sparkSession, scores_path).read()
 
 
 def dhash_ingest_stream(
@@ -587,7 +536,6 @@ def _sig_process_batch(
     predicate (:func:`..operators.multimodal.video_match_stored`) —
     the state layout, replay anti-join, and MERGE protocol are the
     same code for all three."""
-    from ..operators.merge import ParquetMergeTable
     from ..operators.multimodal import dhash_match_stored
 
     if match_fn is None:
@@ -599,7 +547,7 @@ def _sig_process_batch(
         bsig = hash_fn(
             batch_df
         ).persist()  # consumed twice (decision + state commit); batch-sized
-        if os.path.isdir(os.path.join(state_path, "_manifests")):
+        if table.exists():
             # Replay idempotency: a replayed micro-batch may find its OWN
             # committed rows already in the state; matching against them
             # would self-match every previously admitted doc at Hamming 0
@@ -613,19 +561,14 @@ def _sig_process_batch(
                 .join(bsig.select("doc_id"), "doc_id", "left_anti")
                 .select("doc_id", "sig")
             )
-            exists = True
         else:
             stored = spark.createDataFrame([], "doc_id long, sig array<bigint>")
-            exists = False
         try:
             ann = match_fn(
                 stored, bsig, max_hamming=max_hamming, chunk_bits=chunk_bits
             )
             rows = bsig.join(ann.select("doc_id", "dup_of", "is_new"), "doc_id")
-            if exists:
-                table.merge(rows, key="doc_id")
-            else:
-                table.create(rows)
+            table.commit(rows, key="doc_id")
             if sink is not None:
                 sink(ann, batch_id)
         finally:
@@ -653,37 +596,12 @@ def replay_dhash_batches(
     and the K-batch state evolution unrolls to K plain-SQL rounds
     (admitted_k = batch_k docs with no radius-7 match in
     admitted_0..k-1) that DuckDB replays exactly."""
-    import atexit
-    import shutil
-
-    src = _stage_batch_files(docs, workdir, k_batches)
     state_path = os.path.join(workdir, "dhash_state")
-    spark = docs.sparkSession
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(src)
-    )
-    writer = dhash_ingest_stream(
-        stream, state_path, max_hamming=max_hamming, chunk_bits=chunk_bits
-    )
-    q = (
-        writer.option("checkpointLocation", os.path.join(workdir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    from ..operators.merge import ParquetMergeTable
-
-    # same reclamation contract as replay_ingest_batches
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(os.path.join(workdir, "ckpt"), ignore_errors=True)
-    atexit.register(shutil.rmtree, workdir, ignore_errors=True)
-    return (
-        ParquetMergeTable(spark, state_path)
-        .read()
-        .select("doc_id", "dup_of", "is_new")
+    _replay(docs, workdir, k_batches, lambda s: dhash_ingest_stream(
+        s, state_path, max_hamming=max_hamming, chunk_bits=chunk_bits
+    ))
+    return ParquetMergeTable(docs.sparkSession, state_path).read().select(
+        "doc_id", "dup_of", "is_new"
     )
 
 
@@ -727,14 +645,10 @@ def bloom_process_batch(
     4. after words: covered path; the re-OR is a value-level no-op.
     """
     from ..operators.approx import bloom_build, bloom_probe
-    from ..operators.merge import ParquetMergeTable
 
     words_path = os.path.join(state_path, "words")
     adm_path = os.path.join(state_path, "admissions")
     cov_path = os.path.join(state_path, "covered")
-
-    def _exists(path: str) -> bool:
-        return os.path.isdir(os.path.join(path, "_manifests"))
 
     def _or_words(spark, admitted_texts: DataFrame) -> None:
         """OR the admitted docs' bits into the filter (idempotent).
@@ -750,7 +664,7 @@ def bloom_process_batch(
         batch_bits = bloom_build(
             admitted_texts, "text", m_bits=m_bits, k=k, seed=seed
         )
-        if _exists(words_path):
+        if words_t.exists():
             words_t.upsert_or(batch_bits, key="word_id")
         else:
             words_t.create(batch_bits)
@@ -768,7 +682,7 @@ def bloom_process_batch(
             # The filtered isEmpty is a take(1) over parquet row groups
             # that min/max-prune on batch_id: per-batch cost stays flat
             # at any stream age (SCALE.md, batch-count axis).
-            is_covered = _exists(cov_path) and not (
+            is_covered = cov_t.exists() and not (
                 cov_t.read().where(F.col("batch_id") == batch_id).isEmpty()
             )
             if is_covered:
@@ -787,9 +701,10 @@ def bloom_process_batch(
                 if sink is not None:
                     sink(decisions, batch_id)
                 return
+            words_t = ParquetMergeTable(spark, words_path)
             words = (
-                ParquetMergeTable(spark, words_path).read()
-                if _exists(words_path)
+                words_t.read()
+                if words_t.exists()
                 else spark.createDataFrame([], "word_id long, bits long")
             )
             decisions = (
@@ -803,18 +718,14 @@ def bloom_process_batch(
                 .persist()  # consumed thrice (commit, OR, sink); batch-sized
             )
             try:
-                adm_rows = decisions.select("doc_id", "bloom_member", "is_new")
-                if _exists(adm_path):
-                    adm_t.merge(adm_rows, key="doc_id")
-                else:
-                    adm_t.create(adm_rows)
+                adm_t.commit(
+                    decisions.select("doc_id", "bloom_member", "is_new"),
+                    key="doc_id",
+                )
                 marker = spark.createDataFrame(
                     [(int(batch_id),)], "batch_id long"
                 )
-                if _exists(cov_path):
-                    cov_t.merge(marker, key="batch_id")
-                else:
-                    cov_t.create(marker)
+                cov_t.commit(marker, key="batch_id")
                 _or_words(
                     spark,
                     decisions.where(F.col("is_new")).select("text"),
@@ -871,34 +782,12 @@ def replay_bloom_batches(
     """Replay :func:`bloom_ingest_stream` as a finite run on the shared
     deterministic K-batch harness and return the admission log
     ``(doc_id, bloom_member, is_new)``."""
-    import atexit
-    import shutil
-
-    src = _stage_batch_files(docs, workdir, k_batches)
     state_path = os.path.join(workdir, "bloom_state")
-    spark = docs.sparkSession
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(src)
-    )
-    writer = bloom_ingest_stream(
-        stream, state_path, m_bits=m_bits, k=k, seed=seed
-    )
-    q = (
-        writer.option("checkpointLocation", os.path.join(workdir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    from ..operators.merge import ParquetMergeTable
-
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(os.path.join(workdir, "ckpt"), ignore_errors=True)
-    atexit.register(shutil.rmtree, workdir, ignore_errors=True)
+    _replay(docs, workdir, k_batches, lambda s: bloom_ingest_stream(
+        s, state_path, m_bits=m_bits, k=k, seed=seed
+    ))
     return (
-        ParquetMergeTable(spark, os.path.join(state_path, "admissions"))
+        ParquetMergeTable(docs.sparkSession, os.path.join(state_path, "admissions"))
         .read()
         .select("doc_id", "bloom_member", "is_new")
     )
@@ -933,7 +822,6 @@ def decontam_ingest_stream(
     :func:`dhash_ingest_stream`, whose matching state grows with
     admissions and needed explicit self-exclusion)."""
     from ..operators.corpus import decontaminate_scrub_against
-    from ..operators.merge import ParquetMergeTable
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -944,14 +832,9 @@ def decontam_ingest_stream(
             ev_hashes, batch_df, min_len=min_len, hash_family=hash_family
         ).persist()
         try:
-            table = ParquetMergeTable(spark, clean_path)
-            if os.path.isdir(os.path.join(clean_path, "_manifests")):
-                table.merge(scrubbed, key="doc_id")
-            else:
-                # Create unconditionally on the FIRST batch (an empty
-                # frame writes a schema-only parquet file), so a sink
-                # never observes batches before the table exists.
-                table.create(scrubbed)
+            # the first batch creates even when empty, so a sink never
+            # observes batches before the table exists
+            ParquetMergeTable(spark, clean_path).commit(scrubbed, key="doc_id")
             if sink is not None:
                 sink(scrubbed, batch_id)
         finally:
@@ -980,37 +863,16 @@ def replay_decontam_batches(
     exactly, so the streaming path shares the one-shot query's DuckDB
     oracle verbatim — hash-checked, the strongest check any streaming
     twin here gets (the replay_dsir_batches precedent)."""
-    import atexit
-    import shutil
-
     from ..operators.corpus import eval_window_hashes
-    from ..operators.merge import ParquetMergeTable
 
-    spark = docs.sparkSession
     ev = eval_window_hashes(
         eval_docs, min_len=min_len, hash_family=hash_family
     ).localCheckpoint()  # |eval|-bounded; truncates the eval explode
-    src = _stage_batch_files(docs, workdir, k_batches)
     clean_path = os.path.join(workdir, "clean")
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(src)
-    )
-    q = (
-        decontam_ingest_stream(
-            stream, ev, clean_path, min_len=min_len, hash_family=hash_family
-        )
-        .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(os.path.join(workdir, "ckpt"), ignore_errors=True)
-    atexit.register(shutil.rmtree, workdir, ignore_errors=True)
-    return ParquetMergeTable(spark, clean_path).read()
+    _replay(docs, workdir, k_batches, lambda s: decontam_ingest_stream(
+        s, ev, clean_path, min_len=min_len, hash_family=hash_family
+    ))
+    return ParquetMergeTable(docs.sparkSession, clean_path).read()
 
 
 def url_ingest_stream(docs: DataFrame, seen_path: str, url_col: str = "url", sink=None):
@@ -1057,7 +919,6 @@ def url_process_batch(
     level (the ``bloom_process_batch`` pattern) so tests can drive
     crash-replay windows directly."""
     from ..operators.dedup import canonical_url
-    from ..operators.merge import ParquetMergeTable
 
     spark = batch_df.sparkSession
     canon = batch_df.select(
@@ -1067,12 +928,10 @@ def url_process_batch(
         F.min("doc_id").alias("_batch_min")
     )
     table = ParquetMergeTable(spark, seen_path)
-    if os.path.isdir(os.path.join(seen_path, "_manifests")):
+    if table.exists():
         seen = table.read().withColumnRenamed("doc_id", "_owner")
-        exists = True
     else:
         seen = spark.createDataFrame([], "canonical_url string, _owner long")
-        exists = False
     ann = (
         canon.join(firsts, "canonical_url")
         .join(seen, "canonical_url", "left")
@@ -1092,15 +951,10 @@ def url_process_batch(
         .persist()  # consumed twice (state commit + sink); batch-sized
     )
     try:
-        admitted_keys = ann.filter(F.col("admitted")).select(
-            "canonical_url", "doc_id"
+        table.commit(
+            ann.filter(F.col("admitted")).select("canonical_url", "doc_id"),
+            key="canonical_url",
         )
-        if exists:
-            table.merge(admitted_keys, key="canonical_url")
-        else:
-            # unconditional create (empty frame writes a schema-only
-            # file) — the decontam_ingest_stream first-batch rule
-            table.create(admitted_keys)
         if sink is not None:
             sink(ann, batch_id)
     finally:
@@ -1121,42 +975,18 @@ def replay_url_batches(
     replay_ingest_batches precedent).  Decisions accumulate in a
     doc-keyed MERGE table (idempotent under replay, like the bloom
     admissions log)."""
-    import atexit
-    import shutil
-
-    from ..operators.merge import ParquetMergeTable
-
-    spark = docs_urls.sparkSession
-    src = _stage_batch_files(
-        docs_urls, workdir, k_batches, cols=("doc_id", "url")
-    )
     seen_path = os.path.join(workdir, "seen")
     dec_path = os.path.join(workdir, "decisions")
 
     def sink(ann: DataFrame, batch_id: int) -> None:
-        t = ParquetMergeTable(ann.sparkSession, dec_path)
-        if os.path.isdir(os.path.join(dec_path, "_manifests")):
-            t.merge(ann, key="doc_id")
-        else:
-            t.create(ann)
+        ParquetMergeTable(ann.sparkSession, dec_path).commit(ann, key="doc_id")
 
-    stream = (
-        spark.readStream.schema("doc_id long, url string")
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(src)
+    _replay(
+        docs_urls, workdir, k_batches,
+        lambda s: url_ingest_stream(s, seen_path, sink=sink),
+        schema="doc_id long, url string",
     )
-    q = (
-        url_ingest_stream(stream, seen_path, sink=sink)
-        .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(os.path.join(workdir, "ckpt"), ignore_errors=True)
-    atexit.register(shutil.rmtree, workdir, ignore_errors=True)
-    return ParquetMergeTable(spark, dec_path).read().select(
+    return ParquetMergeTable(docs_urls.sparkSession, dec_path).read().select(
         "doc_id", "canonical_url", "admitted"
     )
 
@@ -1215,7 +1045,6 @@ def boilerplate_process_batch(
     tables under ``state_path``: ``lines`` (per-batch line
     doc-frequency deltas) and ``totals`` (per-batch per-source doc
     counts)."""
-    from ..operators.merge import ParquetMergeTable
     from ..operators.paragraphs import boilerplate_census
 
     spark = batch_df.sparkSession
@@ -1235,11 +1064,9 @@ def boilerplate_process_batch(
         b.alias("batch_id"),
     )
     for sub, delta in (("lines", line_delta), ("totals", tot_delta)):
-        t = ParquetMergeTable(spark, os.path.join(state_path, sub))
-        if os.path.isdir(os.path.join(state_path, sub, "_manifests")):
-            t.merge(delta, key="_key")
-        else:
-            t.create(delta)
+        ParquetMergeTable(spark, os.path.join(state_path, sub)).commit(
+            delta, key="_key"
+        )
     if sink is not None:
         sink(line_delta, batch_id)
 
@@ -1249,8 +1076,6 @@ def read_boilerplate_census(spark, state_path: str):
     census shape: ``(line counts (_grp, _h, _n_docs), source totals
     (_grp, _src_docs))`` — the frames
     :func:`..operators.paragraphs.boilerplate_apply` consumes."""
-    from ..operators.merge import ParquetMergeTable
-
     lines = (
         ParquetMergeTable(spark, os.path.join(state_path, "lines"))
         .read()
@@ -1283,33 +1108,15 @@ def replay_boilerplate_batches(
     ``doc_boilerplate_strip``'s DuckDB oracle verbatim (the
     ``doc_dsir_stream_replay`` precedent, extended from frozen-state
     to accumulated-state products)."""
-    import atexit
-    import shutil
-
     from ..operators.paragraphs import boilerplate_apply
 
-    spark = docs.sparkSession
-    src = _stage_batch_files(
-        docs, workdir, k_batches, cols=("doc_id", "source", "text")
-    )
     state_path = os.path.join(workdir, "census")
-    stream = (
-        spark.readStream.schema("doc_id long, source string, text string")
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(src)
+    _replay(
+        docs, workdir, k_batches,
+        lambda s: boilerplate_ingest_stream(s, state_path, para_words=para_words),
+        schema="doc_id long, source string, text string",
     )
-    q = (
-        boilerplate_ingest_stream(stream, state_path, para_words=para_words)
-        .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(os.path.join(workdir, "ckpt"), ignore_errors=True)
-    atexit.register(shutil.rmtree, workdir, ignore_errors=True)
-    lines, totals = read_boilerplate_census(spark, state_path)
+    lines, totals = read_boilerplate_census(docs.sparkSession, state_path)
     return boilerplate_apply(
         docs,
         lines,
@@ -1375,41 +1182,13 @@ def replay_audio_batches(
     :func:`replay_dhash_batches` shape for the audio modality; capture
     exactness at radius 3 over 4 chunks makes the K-round unroll a
     plain-SQL oracle."""
-    import atexit
-    import shutil
-
-    from ..operators.merge import ParquetMergeTable
-
-    src = _stage_batch_files(docs, workdir, k_batches)
     state_path = os.path.join(workdir, "audio_state")
-    spark = docs.sparkSession
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(src)
-    )
-    q = (
-        audio_ingest_stream(
-            stream,
-            state_path,
-            window_bytes=window_bytes,
-            n_bits=n_bits,
-            max_hamming=max_hamming,
-            chunk_bits=chunk_bits,
-        )
-        .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(os.path.join(workdir, "ckpt"), ignore_errors=True)
-    atexit.register(shutil.rmtree, workdir, ignore_errors=True)
-    return (
-        ParquetMergeTable(spark, state_path)
-        .read()
-        .select("doc_id", "dup_of", "is_new")
+    _replay(docs, workdir, k_batches, lambda s: audio_ingest_stream(
+        s, state_path, window_bytes=window_bytes, n_bits=n_bits,
+        max_hamming=max_hamming, chunk_bits=chunk_bits,
+    ))
+    return ParquetMergeTable(docs.sparkSession, state_path).read().select(
+        "doc_id", "dup_of", "is_new"
     )
 
 
@@ -1476,40 +1255,13 @@ def replay_video_batches(
     deterministic K-batch harness and return the accumulated admission
     table ``(doc_id, dup_of, is_new)`` — the
     :func:`replay_dhash_batches` shape for the video modality."""
-    import atexit
-    import shutil
-
-    from ..operators.merge import ParquetMergeTable
-
-    src = _stage_batch_files(docs, workdir, k_batches)
     state_path = os.path.join(workdir, "video_state")
-    spark = docs.sparkSession
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(src)
-    )
-    q = (
-        video_ingest_stream(
-            stream,
-            state_path,
-            n_frames=n_frames,
-            max_hamming=max_hamming,
-            chunk_bits=chunk_bits,
-        )
-        .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(os.path.join(workdir, "ckpt"), ignore_errors=True)
-    atexit.register(shutil.rmtree, workdir, ignore_errors=True)
-    return (
-        ParquetMergeTable(spark, state_path)
-        .read()
-        .select("doc_id", "dup_of", "is_new")
+    _replay(docs, workdir, k_batches, lambda s: video_ingest_stream(
+        s, state_path, n_frames=n_frames, max_hamming=max_hamming,
+        chunk_bits=chunk_bits,
+    ))
+    return ParquetMergeTable(docs.sparkSession, state_path).read().select(
+        "doc_id", "dup_of", "is_new"
     )
 
 
@@ -1545,7 +1297,6 @@ def keepbest_ingest_stream(
     SUM) — and the per-batch upsert of a max equals the one-shot max
     for ANY batching, which is what lets the replay twin share a
     one-shot SQL oracle."""
-    from ..operators.merge import ParquetMergeTable
     from ..operators.multimodal import attach_media, image_dhash
 
     sigs_path = os.path.join(state_path, "sigs")
@@ -1567,8 +1318,7 @@ def keepbest_ingest_stream(
                 F.col("doc_id").alias("best_id"),
             )
             wt = ParquetMergeTable(spark, win_path)
-            exists = os.path.isdir(os.path.join(win_path, "_manifests"))
-            if exists:
+            if wt.exists():
                 # Only clusters THIS batch touches re-derive their
                 # winner: stored rows semi-join the batch's cluster
                 # ids before the union, so the per-batch groupBy and
@@ -1600,10 +1350,7 @@ def keepbest_ingest_stream(
                     (-F.col("_b._n")).cast("long").alias("best_id"),
                 )
             )
-            if exists:
-                wt.merge(best, key="cluster_id")
-            else:
-                wt.create(best)
+            wt.commit(best, key="cluster_id")
 
         inner = _sig_process_batch(
             sigs_path, hash_fn, max_hamming, chunk_bits, sink
@@ -1627,34 +1374,15 @@ def replay_keepbest_batches(
     harness and return the final per-cluster report ``(cluster_id,
     best_id, best_q, n_members)`` — winners ledger joined to member
     counts from the admission log, both read from committed state."""
-    import atexit
-    import shutil
-
-    from ..operators.merge import ParquetMergeTable
-
-    src = _stage_batch_files(
-        docs, workdir, k_batches, cols=("doc_id", "text", "quality")
-    )
     state_path = os.path.join(workdir, "keepbest_state")
+    _replay(
+        docs, workdir, k_batches,
+        lambda s: keepbest_ingest_stream(
+            s, state_path, max_hamming=max_hamming, chunk_bits=chunk_bits
+        ),
+        schema="doc_id long, text string, quality long",
+    )
     spark = docs.sparkSession
-    stream = (
-        spark.readStream.schema("doc_id long, text string, quality long")
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(src)
-    )
-    q = (
-        keepbest_ingest_stream(
-            stream, state_path, max_hamming=max_hamming, chunk_bits=chunk_bits
-        )
-        .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(os.path.join(workdir, "ckpt"), ignore_errors=True)
-    atexit.register(shutil.rmtree, workdir, ignore_errors=True)
     adm = ParquetMergeTable(spark, os.path.join(state_path, "sigs")).read()
     counts = (
         adm.select(F.coalesce("dup_of", "doc_id").alias("cluster_id"))

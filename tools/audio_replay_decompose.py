@@ -16,8 +16,8 @@ Components per batch (names match the BENCH_NOTES table):
   (the one Arrow-batched decode pass), materialized via persist+count.
 * ``match``   — state read + replay anti-join + banded decision
   (``dhash_match_stored``), materialized via persist+count.
-* ``merge``   — admission-row join + ``ParquetMergeTable.merge``
-  (create on batch 0), including the parquet write.
+* ``merge``   — admission-row join + ``ParquetMergeTable.commit``
+  (the handler's create-or-merge), including the parquet write.
 
 Usage: python tools/audio_replay_decompose.py [--sf /root/testdata/sf0.1]
 """
@@ -101,17 +101,15 @@ def main() -> int:
         row["decode"] = time.perf_counter() - t0
 
         t0 = time.perf_counter()
-        if os.path.isdir(os.path.join(state_path, "_manifests")):
+        if table.exists():
             stored = (
                 table.read()
                 .filter(F.col("is_new"))
                 .join(bsig.select("doc_id"), "doc_id", "left_anti")
                 .select("doc_id", "sig")
             )
-            exists = True
         else:
             stored = spark.createDataFrame([], "doc_id long, sig array<bigint>")
-            exists = False
         ann = dhash_match_stored(
             stored, bsig, max_hamming=MAXH, chunk_bits=CHUNKB
         ).persist()
@@ -120,10 +118,7 @@ def main() -> int:
 
         t0 = time.perf_counter()
         rows = bsig.join(ann.select("doc_id", "dup_of", "is_new"), "doc_id")
-        if exists:
-            table.merge(rows, key="doc_id")
-        elif not rows.isEmpty():
-            table.create(rows)
+        table.commit(rows, key="doc_id")
         row["merge"] = time.perf_counter() - t0
 
         bsig.unpersist()
